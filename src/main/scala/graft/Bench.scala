@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Runner
 
 /** Benchmark main — runs the headline query set on
   * `SPARK_GRAFT_SF_DIR` and prints one JSON line
@@ -15,7 +15,7 @@ import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** One per engine area; names must exist in SparkEntry.queries
-    * (spec-guarded — a missing name would be silently skipped here).
+    * (spec-guarded — a missing name would only show as a failed entry).
     */
   private[graft] val Headline = Seq(
     "q1_inverted_index",
@@ -130,17 +130,11 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      ).getOrCreate()
-    // ERROR, not WARN: the per-query `freeAllPersistedRdds` sweep emits a
+    // ERROR log level (the core's default): the per-query release emits a
     // localCheckpoint-lineage WARN per freed block, and hundreds of those
     // lines around the single JSON result line have (every round so far)
     // broken the driver's parse of this benchmark's output.
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Runner.session()
 
     // JVM warmup: run every headline plan once at a small SF so the
     // measured runs see JIT-compiled expression paths (the interpreted
@@ -149,22 +143,13 @@ object Bench {
     // not sf0.001: the tiny corpus executes the HOF lambdas too few times
     // to reach C2's invocation thresholds, which showed up as occasional
     // 8-10x first-measurement outliers on the lambda-heavy queries.
+    // Same action as the measured loop, so warmup JITs the same
+    // expression paths (a count-pruned warmup would skip them).
     val warmDir = "/root/testdata/sf0.01"
     if (new java.io.File(warmDir).isDirectory)
-      Headline.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          // same action as the measured loop, so warmup JITs the same
-          // expression paths (a count-pruned warmup would skip them)
-          try fn(spark, warmDir).queryExecution.toRdd.count()
-          catch { case scala.util.control.NonFatal(_) => () }
-          // queries persist() intermediates they reference more than once;
-          // the runner owns the cache lifecycle — drop them per query so
-          // storage memory never accumulates across the session (incl.
-          // localCheckpoint blocks, which clearCache cannot reach)
-          spark.catalog.clearCache()
-          org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-        }
-      }
+      Runner.each(spark, Headline) { name =>
+        SparkEntry.queries(name)(spark, warmDir).queryExecution.toRdd.count()
+      } ((_, _) => ())
     spark.read.parquet(s"$sfDir/nation.parquet").count()
 
     // Timing: 4 INTERLEAVED full-list passes, per-query MIN across passes.
@@ -176,11 +161,12 @@ object Bench {
     val reps = 4
     val samples = collection.mutable.Map.empty[String, List[Double]]
       .withDefaultValue(Nil)
-    for (_ <- 1 to reps; name <- Headline; fn <- SparkEntry.queries.get(name)) {
+    for (_ <- 1 to reps) Runner.each(spark, Headline) { name =>
+      val fn = SparkEntry.queries(name)
       val t0 = System.nanoTime()
-      // NonFatal only (same policy as BenchOne): an OOM must abort the
-      // sweep — every later sample from a corrupted JVM would silently
-      // feed the per-query minima this artifact exists to make honest.
+      // The core's NonFatal policy: an OOM aborts the sweep — every later
+      // sample from a corrupted JVM would silently feed the per-query
+      // minima this artifact exists to make honest.
       // toRdd.count(), NOT Dataset.count(): the latter lets Catalyst
       // prune every column and even ELIMINATE row-preserving outer
       // joins whose build side is an aggregate on the join key — a
@@ -190,13 +176,9 @@ object Bench {
       // sf0.1). Executing the query's OWN compiled physical plan and
       // counting its rows times what a user materializing the result
       // actually pays, for every query uniformly.
-      val n = try fn(spark, sfDir).queryExecution.toRdd.count()
-        catch { case scala.util.control.NonFatal(_) => -1L }
-      val sec = (System.nanoTime() - t0) / 1e9
-      spark.catalog.clearCache() // per-query cache ownership (see warmup)
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-      samples(name) = (if (n < 0) -1.0 else sec) :: samples(name)
-    }
+      fn(spark, sfDir).queryExecution.toRdd.count()
+      samples(name) = (System.nanoTime() - t0) / 1e9 :: samples(name)
+    } ((name, _) => samples(name) = -1.0 :: samples(name))
     val results = Headline.flatMap { name =>
       samples.get(name).map { secs =>
         name -> (if (secs.exists(_ < 0)) -1.0 else secs.min)

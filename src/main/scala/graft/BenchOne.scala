@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.tools.Runner
 
 /** Dev tool: time one named query from [[SparkEntry.queries]] repeatedly
   * in a single JVM — `runMain graft.BenchOne <name> <sfDir> [reps]` —
@@ -14,51 +14,28 @@ import org.apache.spark.sql.SparkSession
   */
 object BenchOne {
   def main(args: Array[String]): Unit = {
-    val name = args(0)
+    val sweep = args(0) == "ALL"
+    val names = Runner.select(args(0))
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 3
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      // dev knob for partition-count experiments; the canonical sweep
-      // (Bench) stays pinned at 32
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "32"))
-      .config("spark.sql.adaptive.enabled", "true")
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    var failures = 0
+    val runs =
+      if (sweep) names.map(_ -> "sweep")
+      else names.flatMap(q => (1 to reps).map(i => q -> s"rep $i"))
+    val spark = Runner.session(logLevel = "WARN")
     val mins = collection.mutable.LinkedHashMap.empty[String, Double]
-    def time(q: String, label: String): Unit = {
+    val failures = Runner.each(spark, runs) { case (q, label) =>
       val t0 = System.nanoTime()
-      try {
-        // toRdd.count(): full-plan materialization, never the
-        // count-collapsed plan (see Bench.scala — pruned row-preserving
-        // shapes would otherwise "benchmark" as bare scans)
-        val n = SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count()
-        val sec = (System.nanoTime() - t0) / 1e9
-        mins(q) = math.min(mins.getOrElse(q, Double.MaxValue), sec)
-        println(f"[benchone] $q $label: $sec%.3f s ($n rows)")
-      } catch {
-        // NonFatal only: an OOM or similar must abort the sweep — timings
-        // from a corrupted JVM would be meaningless
-        case scala.util.control.NonFatal(e) =>
-          failures += 1
-          println(s"[benchone] $q $label: FAILED ${e.getClass.getSimpleName}: ${e.getMessage}")
-      } finally {
-        spark.catalog.clearCache()
-        org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-      }
+      // toRdd.count(): full-plan materialization, never the
+      // count-collapsed plan (see Bench.scala — pruned row-preserving
+      // shapes would otherwise "benchmark" as bare scans)
+      val n = SparkEntry.queries(q)(spark, sfDir).queryExecution.toRdd.count()
+      val sec = (System.nanoTime() - t0) / 1e9
+      mins(q) = math.min(mins.getOrElse(q, Double.MaxValue), sec)
+      println(f"[benchone] $q $label: $sec%.3f s ($n rows)")
+    } { case ((q, label), e) =>
+      println(s"[benchone] $q $label: FAILED ${e.getClass.getSimpleName}: ${e.getMessage}")
     }
-    if (name == "ALL")
-      SparkEntry.queries.keys.toSeq.sorted.foreach(q => time(q, "sweep"))
-    else {
-      val names = name.split(",").map(_.trim).filter(_.nonEmpty).toSeq
-      names.foreach(q =>
-        require(SparkEntry.queries.contains(q), s"unknown query: $q"))
-      names.foreach(q => (1 to reps).foreach(i => time(q, s"rep $i")))
-      names.foreach(q =>
-        mins.get(q).foreach(m => println(f"[benchone] $q min=$m%.3f s")))
-    }
+    if (!sweep) mins.foreach { case (q, m) => println(f"[benchone] $q min=$m%.3f s") }
     spark.stop()
     if (failures > 0) {
       System.err.println(s"[benchone] $failures quer${if (failures == 1) "y" else "ies"} FAILED")

@@ -14,11 +14,12 @@ object SparkEntry {
     * q362's packed stage) and must NOT unpersist them — the DataFrame
     * is returned lazily, so an unpersist before the caller's action
     * would defeat the cache. The RUNNER owns release: after each
-    * query's terminal action, call `spark.catalog.clearCache()` plus
-    * `Bridge.freeAllPersistedRdds(spark)` (the latter reaches
-    * localCheckpoint blocks clearCache cannot). Verify, Bench, BenchOne
-    * and the plan/round specs all do; any new runner must too, or
-    * executor storage pins grow with every query run.
+    * query's terminal action, call `graft.tools.Runner.release(spark)`
+    * (cached plans plus every persisted RDD, localCheckpoint blocks
+    * included), or run the queries through `Runner.each`, which does.
+    * Verify, Bench, BenchOne, the dev tools and the specs all do; any
+    * new runner must too, or executor storage pins grow with every
+    * query run.
     */
   def queries: Map[String, (SparkSession, String) => DataFrame] =
     ReferenceQueries.queries ++ RelationalQueries.queries ++

@@ -1,42 +1,24 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.tools.Runner
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
+    // Local-dev subset (comma-separated exact names); unset, the full
+    // surface runs.
+    val names = Runner.select(sys.env.getOrElse("GRAFT_VERIFY_ONLY", "ALL"))
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = graft.sources.SessionDefaults.harness(SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      ).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Runner.session(cpus, partitions = cpus, logLevel = "WARN")
     new java.io.File(outDir).mkdirs()
-    // Local-dev subset filter (comma-separated exact names). The driver
-    // never sets it → the full surface always runs in the gate.
-    val only = sys.env.get("GRAFT_VERIFY_ONLY")
-      .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSet)
-    var dumped = 0
-    var failed = 0
-    SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.contains(name)) }
-      .foreach { case (name, fn) =>
-      try {
-        fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-          .parquet(s"$outDir/$name")
-        dumped += 1
-      } catch { case e: Throwable =>
-        failed += 1
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-      }
-      // queries persist() shared intermediates; the runner owns the cache
-      // lifecycle — release them once the query's terminal write is done.
-      // freeAllPersistedRdds additionally drops localCheckpoint blocks
-      // (connected components), which clearCache cannot reach.
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-    }
+    // the core releases each query's persisted intermediates once its
+    // terminal write is done
+    val failed = Runner.each(spark, names) { name =>
+      SparkEntry.queries(name)(spark, sfDir).coalesce(1).write.mode("overwrite")
+        .parquet(s"$outDir/$name")
+    } { (name, e) => System.err.println(s"[verify] $name failed: ${e.getMessage}") }
+    val dumped = names.size - failed
     // JSON string escape: backslash, quote, and ALL control chars (<0x20)
     // — a tab or CR in builder-authored SQL would otherwise make the
     // driver's json.load fail and silently zero the round's correctness.

@@ -109,7 +109,7 @@ object BpeEncodeRanked {
     private def encodeWord(word: String): Array[UTF8String] = {
       val hit = memo.get(word)
       if (hit != null) return hit
-      var syms = new Array[String](word.length)
+      val syms = new Array[String](word.length)
       var i = 0
       while (i < word.length) {
         syms(i) = String.valueOf(word.charAt(i))

@@ -402,8 +402,8 @@ object Dedup {
     * Ownership of the RETURNED labels' checkpoint blocks passes to the
     * caller: free them once results are materialized, either directly
     * (`Bridge.freeLocalCheckpoint(labels)`) or via the runner-level
-    * `Bridge.freeAllPersistedRdds` that Verify/Bench/BenchOne call after
-    * every query — `clearCache()` alone cannot reach checkpoint blocks.
+    * `graft.tools.Runner.release` that every runner calls after every
+    * query — `clearCache()` alone cannot reach checkpoint blocks.
     *
     * INPUT CONTRACT: pass a DEDUPED pair table. Labels are identical
     * either way (every aggregation in the loop is a duplicate-

@@ -212,7 +212,7 @@ object Edges {
     */
   private def materializedTable(
       spark: SparkSession, tbl: String, bucketCol: String,
-      gcStale: Option[(Seq[String], String)] = None)(
+      gcStale: Option[(Seq[String], String)])(
       build: => DataFrame): DataFrame = {
     matLock.synchronized {
       if (!spark.catalog.tableExists(tbl)) {

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -62,7 +62,6 @@ object GraphRank {
   def textRank(
       docs: DataFrame,
       textCol: String,
-      idCol: String,
       iters: Int = 4,
       topK: Int = 50): DataFrame = {
     require(iters >= 1, "iters must be >= 1")

@@ -266,7 +266,7 @@ object Similarity {
     * near-duplicates with high probability; search joins on the bucket id —
     * an equality join on a 2^numPlanes-ary key, the scale path for ANN.
     */
-  def lshBuckets(vectors: DataFrame, idCol: String, dim: Int, numPlanes: Int): DataFrame = {
+  def lshBuckets(vectors: DataFrame, dim: Int, numPlanes: Int): DataFrame = {
     val planes: Seq[Seq[Double]] =
       (0 until numPlanes).map(p => (0 until dim).map(d => planeComponent(p, d)))
     val sigBits = (0 until numPlanes).map { p =>
@@ -329,8 +329,8 @@ object Similarity {
     * array yields both the home cell (element 1 — identical to
     * [[ivfAssign]]'s `array_min`, same tie rule) and the probe list, and
     * the scored table is persisted so the self-join's two sides don't
-    * re-score. Cache lifecycle is owned by the caller/runner (clearCache
-    * per query).
+    * re-score. Cache lifecycle is owned by the caller/runner
+    * (`graft.tools.Runner.release` per query).
     */
   def ivfTopK(
       vectors: DataFrame, idCol: String, k: Int,
@@ -563,7 +563,7 @@ object Similarity {
       vectors: DataFrame, idCol: String, dim: Int, numPlanes: Int, k: Int): DataFrame = {
     // persisted: the probe/candidate self-join would otherwise evaluate
     // the numPlanes signature dots twice per vector; runner owns the cache
-    val bucketed = lshBuckets(vectors, idCol, dim, numPlanes).persist()
+    val bucketed = lshBuckets(vectors, dim, numPlanes).persist()
     // probe buckets: own bucket + each one-bit flip
     val probes = bucketed.select(
       col(idCol).as("query_id"), col("v").as("qv"), col("nv").as("qn"),

@@ -23,9 +23,6 @@ object TextAnalysis {
     "es" -> Seq("el", "la", "los", "de", "y", "un", "una"),
     "fr" -> Seq("le", "la", "les", "de", "et", "un", "une"))
 
-  private def hits(words: Column, list: Seq[String]): Column =
-    size(filter(words, w => w.isin(list.map(lit): _*)))
-
   /** Per-document language prediction: argmax of stopword hits, ties to
     * the alphabetically first language, no hits at all → "und".
     * Emits (…, s_de, s_en, s_es, s_fr, pred_lang).

@@ -330,7 +330,7 @@ object RelationalQueries {
     // in the final assembly join); persist the user-sized results so the
     // cascade runs each events scan ONCE instead of recomputing the whole
     // prefix chain per reference (10 scans → 4). Runner owns the cache
-    // lifecycle (clearCache per query).
+    // lifecycle (Runner.release per query).
     def step(prev: DataFrame, prevCol: String, evType: String, outCol: String): DataFrame =
       e.filter(col("event_type") === evType)
         .join(prev.select(col("user_id"), col(prevCol)), Seq("user_id"))
@@ -1438,7 +1438,6 @@ object RelationalQueries {
   // |converted users| rows, the standard exact-quantile trade (swap in
   // the equi-depth histogram q128 shape if even that is too large).
   def q163ConversionLag(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val e = events(spark, dir)
     val firstView = e.filter(col("event_type") === "view")
       .groupBy("user_id").agg(min(col("ts")).as("t_view"))
@@ -3734,7 +3733,6 @@ object RelationalQueries {
     * full-width rank window.
     */
   def q214BinnedMedian(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.spark.sql.expressions.Window
     val o = t(spark, dir, "orders")
       .select(col("o_totalprice").as("p"), col("o_orderkey"))
     val stats = o.agg(min(col("p")).as("mn"), max(col("p")).as("mx"),

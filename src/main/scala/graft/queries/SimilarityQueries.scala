@@ -179,7 +179,7 @@ object SimilarityQueries {
     * (bucket parity verified value-for-value at sf0.01).
     */
   def q35EmbedDupLsh(spark: SparkSession, dir: String): DataFrame = {
-    val b = Similarity.lshBuckets(vectors(spark, dir), "vec_id", dim = 64, numPlanes = 8)
+    val b = Similarity.lshBuckets(vectors(spark, dir), dim = 64, numPlanes = 8)
     // dot/(na*nb) with the precomputed norms from prepared(): identical
     // operand values and order as the unfactored cosine — bit-equal, one
     // dot per candidate pair instead of three

@@ -1982,7 +1982,6 @@ object StreamParityQueries {
       chunk: Int, delaySec: Long, globalMaxUs: Long, n: Long)
 
   private def disorderPrelude(spark: SparkSession, dir: String): DisorderFeed = {
-    import spark.implicits._
     import scala.jdk.CollectionConverters._
     val ev = valEvents(spark, dir)
       // persisted: the count, the span pass and the feed pass otherwise

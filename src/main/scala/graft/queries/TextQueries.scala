@@ -1317,7 +1317,6 @@ object TextQueries {
     // after is 30·|sources| rows, the pair table |sources|²·30.
     "q279_stylometry" -> ((s, dir) => {
       import org.apache.spark.sql.functions._
-      import org.apache.spark.sql.expressions.Window
       val sw = docs(s, dir)
         .select(col("source"), graft.functions.AlnumTokens(col("text")))
         .groupBy("source", "word").agg(count(lit(1)).as("c"))
@@ -1905,7 +1904,7 @@ object TextQueries {
     // determinism + scale contract). The oracle unrolls the identical
     // integer recurrence iteration by iteration.
     "q115_textrank" -> ((s, dir) =>
-      graft.operators.GraphRank.textRank(docs(s, dir), "text", "doc_id")),
+      graft.operators.GraphRank.textRank(docs(s, dir), "text")),
     // q113: count-min sketch heavy hitters — the bounded-memory frequency
     // sketch (depth 4 × width 1024 here; d×w counters at ANY corpus
     // scale, vs an unbounded exact-count hash table over the open key

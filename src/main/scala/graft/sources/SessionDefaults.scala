@@ -2,11 +2,12 @@ package graft.sources
 
 import org.apache.spark.sql.SparkSession
 
-/** The session knobs EVERY harness entry point shares (Bench, BenchOne,
-  * Verify, Explain, ScaleUp, the test base) — one definition, so a
-  * future harness-wide knob (or a fix to one) cannot silently miss an
-  * entry point. Per-entry-point knobs (master, shuffle partitions,
-  * AQE) stay with their builders.
+/** The session knobs EVERY harness entry point shares — one definition,
+  * so a future harness-wide knob (or a fix to one) cannot silently miss
+  * an entry point. Its callers are `graft.tools.Runner.session` (behind
+  * Bench, BenchOne, Verify, ExplainMany, ProfileOne and ScaleUp), the
+  * test base, `IndexJob.main` and the benchmark harness. Master, shuffle
+  * partitions and AQE stay with those builders.
   *
   *   - UTC session time zone: every oracle comparison assumes it;
   *   - no UI: headless batch JVMs;

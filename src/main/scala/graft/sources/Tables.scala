@@ -1,54 +1,9 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.DataFrame
 
-/** Source/sink facade — the engine's IO surface beyond the reference's
-  * plain-text scan (SURVEY §2.2 "scans/sources/sinks"): parquet, ORC,
-  * CSV, JSON, and text, with explicit-schema reads (schema inference is
-  * a full extra pass at 100 TB — always pass the schema in production)
-  * and partitioned columnar writes.
-  */
+/** Table-level statistics over any DataFrame source. */
 object Tables {
-
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
-
-  /** CSV with explicit schema and header. */
-  def csv(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).option("header", "true").csv(path)
-
-  /** JSON-lines with explicit schema. */
-  def json(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    spark.read.schema(schema).json(path)
-
-  def text(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path)
-
-  /** ORC — Spark's other built-in columnar format (predicate pushdown and
-    * column pruning like parquet).
-    */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    spark.read.orc(path)
-
-  /** Partitioned parquet write — the standard large-output layout:
-    * `partitionBy` gives partition pruning to downstream readers.
-    */
-  def writeParquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  def writeCsv(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).option("header", "true").csv(path)
-
-  def writeJson(df: DataFrame, path: String): Unit =
-    df.write.mode(SaveMode.Overwrite).json(path)
-
-  def writeOrc(df: DataFrame, path: String, partitionBy: Seq[String] = Nil): Unit = {
-    val w = df.write.mode(SaveMode.Overwrite)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).orc(path)
-  }
 
   /** Column profile — the `ANALYZE TABLE`-style statistics pass every
     * engine exposes: one row per profiled column with row count, null

@@ -14,12 +14,14 @@ object Bridge {
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
   /** Drain the SparkListener event bus (delivery is asynchronous) so a
-    * listener-aggregating tool reads a complete view — dev tooling
-    * support (ProfileOne's stage table); `listenerBus` is
-    * `private[spark]`, hence exposed from this bridge package.
+    * listener-aggregating tool reads a complete view (ProfileOne's stage
+    * table, through `graft.tools.Runner.drain`). Throws
+    * `TimeoutException` if the bus is not empty within `timeoutMillis`.
+    * `listenerBus` is `private[spark]`, hence exposed from this bridge
+    * package.
     */
-  def waitListenerBusEmpty(spark: SparkSession): Unit =
-    spark.sparkContext.listenerBus.waitUntilEmpty()
+  def waitListenerBusEmpty(spark: SparkSession, timeoutMillis: Long): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMillis)
 
   /** Free the storage blocks behind a `localCheckpoint`ed Dataset.
     * Checkpoint blocks are RDD-level caches OUTSIDE the CacheManager, so
@@ -46,10 +48,12 @@ object Bridge {
 
   /** Free EVERY persisted RDD in the session — `persist()`ed plans and
     * `localCheckpoint` blocks alike (the latter live outside the
-    * CacheManager, so `clearCache()` alone leaks them). For runners
-    * (Verify/Bench/BenchOne) that own the cache lifecycle: call AFTER a
-    * query's results are fully materialized, never mid-plan — local-
-    * checkpoint blocks cannot be recomputed once dropped.
+    * CacheManager, so `clearCache()` alone leaks them). Runners do not
+    * call this directly: `graft.tools.Runner.release` pairs it with
+    * `clearCache()` and is the one release path of every runner main,
+    * dev tool and spec. It runs AFTER a query's results are fully
+    * materialized, never mid-plan — local-checkpoint blocks cannot be
+    * recomputed once dropped.
     *
     * SCOPE: this unpersists every persisted RDD in the SparkContext,
     * including ones persisted by code outside the caller's ownership. It

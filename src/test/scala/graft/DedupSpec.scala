@@ -4,6 +4,7 @@ import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Dedup
+import graft.tools.Runner
 
 class DedupSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -186,10 +187,10 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     // tiny (each non-benchmark doc tests a few hundred shingles)
     val exact = graft.queries.DedupQueries.q78Decontaminate(spark, sfDir)
       .as[(Long, Long)].collect().toMap
-    spark.catalog.clearCache()
+    Runner.release(spark)
     val bloom = graft.queries.DedupQueries.q93BloomDecontaminate(spark, sfDir)
       .as[(Long, Long)].collect().toMap
-    spark.catalog.clearCache()
+    Runner.release(spark)
     exact.foreach { case (id, n) =>
       assert(bloom.contains(id), s"exactly-flagged doc $id missing from bloom answer")
       assert(bloom(id) >= n, s"doc $id: bloom count ${bloom(id)} < exact $n")
@@ -309,8 +310,7 @@ class DedupSpec extends AnyFunSuite with SparkTestBase {
     def labelMap(salt: Int) = {
       val m = Dedup.connectedComponents(pairs, saltBuckets = salt)
         .as[(Long, Long)].collect().toMap
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
       m
     }
     val plain = labelMap(1)

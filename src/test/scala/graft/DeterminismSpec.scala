@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** The M×R-grid analog for the query surface: results must be identical
   * across shuffle-partition counts (the driver's oracle compare assumes
@@ -157,7 +158,7 @@ class DeterminismSpec extends AnyFunSuite with SparkTestBase {
       // would silently substitute the FIRST run's cached tables (same
       // canonical plan) instead of re-executing at the new partition
       // count — making the invariance assertion vacuous
-      spark.catalog.clearCache()
+      Runner.release(spark)
       spark.conf.set("spark.sql.shuffle.partitions", parts)
       Queries.map { q =>
         q -> SparkEntry.queries(q)(spark, sfDir).collect()

@@ -184,7 +184,7 @@ class FunctionsSpec extends AnyFunSuite with SparkTestBase {
     // ladder (e.g. sizes [3,5,5,9]) unmerged. Random partial-buffer sizes
     // and merge orders exercise exactly those equal-size collisions.
     val rnd = new Random(7)
-    val partials = (0 until 24).map { p =>
+    val partials = (0 until 24).map { _ =>
       var b = CompressedPostingsAgg.zero
       val count = 1 + rnd.nextInt(6000)
       (0 until count).foreach { _ =>

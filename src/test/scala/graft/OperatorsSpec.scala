@@ -1,10 +1,10 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.{Similarity, SkewJoin}
 import graft.sources.Tables
+import graft.tools.Runner
 
 class OperatorsSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -101,23 +101,6 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
         sum(col("l_extendedprice").cast("decimal(18,4)")).cast("double").as("revenue"))
       .as[(Long, Double, Long, Double)].collect().toSet
     assert(pruned == plain, "Bloom pruning changed the join result")
-  }
-
-  test("csv/json/parquet round-trip through the Tables facade") {
-    val df = Seq((1L, "a", 1.5), (2L, "b", -2.0), (3L, "c", 0.0))
-      .toDF("id", "name", "score")
-    val base = Files.createTempDirectory("graft-tables").toString
-    Tables.writeParquet(df, s"$base/p", partitionBy = Seq("name"))
-    Tables.writeCsv(df, s"$base/c")
-    Tables.writeJson(df, s"$base/j")
-    Tables.writeOrc(df, s"$base/o")
-    val p = Tables.parquet(spark, s"$base/p").select("id", "name", "score")
-    val c = Tables.csv(spark, s"$base/c", df.schema)
-    val j = Tables.json(spark, s"$base/j", df.schema)
-    val o = Tables.orc(spark, s"$base/o")
-    val want = df.as[(Long, String, Double)].collect().sorted.toSeq
-    for (r <- Seq(p, c, j, o))
-      assert(r.as[(Long, String, Double)].collect().sorted.toSeq == want)
   }
 
   test("column profile counts nulls/distincts exactly; approx distinct tracks it") {
@@ -798,8 +781,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       .count()
     assert(idWedges > 1000L,
       s"the fixture must demonstrate the id-orientation blowup, got $idWedges")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   test("shared bipartite customer-part build: distinct grain, support-consistent") {
@@ -820,8 +802,7 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
     assert(grouped.count() == n)
     assert(grouped.filter(col("support") < 1).count() == 0)
     assert(e.join(grouped, Seq("c", "p"), "left_anti").count() == 0)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   test("triangleCount matches the naive enumeration on a random graph") {
@@ -837,13 +818,11 @@ class OperatorsSpec extends AnyFunSuite with SparkTestBase {
       pairs.collect { case (b2, c) if b2 == b => (a, b, c) }
     }.count { case (a, _, c) => pairs.contains((a, c)) }
     val got = Edges.triangleCount(e).as[Long].collect().head
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(got == naive, s"degree-oriented count $got != naive $naive")
     // per-node participation credits each triangle's three corners
     val perNode = Edges.trianglesPerNode(e).as[(Long, Long)].collect()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(perNode.map(_._2).sum == 3 * naive,
       "sum of per-node triangle counts must be 3x the census")
     // independent per-node check against naive triple enumeration

@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** Physical-plan regression tests: the performance properties the engine
   * relies on at scale (filter pushdown, column pruning, broadcast
@@ -45,7 +46,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val df = SparkEntry.queries("q8_tfidf")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
+    Runner.release(spark)
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 1, s"df join must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"))
     // df must be derived from the materialized tf table, not from a
@@ -108,8 +109,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
         s"$q plans a cartesian product:\n$p")
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$q plans a broadcast nested-loop join:\n$p")
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
     }
   }
 
@@ -136,8 +136,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$name plans a broadcast nested-loop join:\n$p")
     }
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   test("q323: the bucket model rides a broadcast join, never a shuffle of the doc grain") {
@@ -148,8 +147,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val df = SparkEntry.queries("q323_importance_resampling")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert("BroadcastHashJoin".r.findAllIn(p).size >= 1,
       s"q323's model join must broadcast:\n$p")
     assert(!p.contains("CartesianProduct"))
@@ -197,8 +195,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       val p = plan(q)
       assert(p.contains("TakeOrderedAndProject"),
         s"$q must plan its bottom-k as TakeOrdered:\n$p")
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
     }
   }
 
@@ -209,7 +206,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     for (q <- Seq("q202_max_concurrency", "q210_temporal_cooccur")) {
       val p = plan(q)
       assert(!p.contains("Join"), s"$q must stay window+agg only:\n$p")
-      spark.catalog.clearCache()
+      Runner.release(spark)
     }
   }
 
@@ -391,8 +388,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val df = SparkEntry.queries("q93_bloom_decontaminate")(spark, sfDir)
     df.collect() // AQE finalizes codegen wrappers only after execution
     val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert("\\*\\(\\d+\\) Filter .*might_contain_string".r.findFirstIn(p).isDefined,
       s"sketch filter not in a codegen span:\n$p")
   }
@@ -404,8 +400,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val df = SparkEntry.queries("q119_bloom_join_prune")(spark, sfDir)
     df.collect() // AQE finalizes codegen wrappers only after execution
     val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert("\\*\\(\\d+\\) Filter .*might_contain_long".r.findFirstIn(p).isDefined,
       s"Bloom key filter not in a codegen span:\n$p")
   }
@@ -481,8 +476,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       val bad = unpartitionedWindows(phys)
       assert(bad.isEmpty,
         s"$q plans a single-partition window:\n${bad.mkString("\n")}")
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
     }
   }
 
@@ -500,8 +494,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       val df = SparkEntry.queries(q)(spark, sfDir)
       df.collect()
       val p = df.queryExecution.executedPlan.toString
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
       assert(!p.contains("CartesianProduct"), s"$q plans a cross product")
       assert(!p.contains("BroadcastNestedLoopJoin"),
         s"$q plans a nested-loop join")
@@ -515,8 +508,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       case pp => pp
     }
     val bad = phys.collect { case w: WindowExec if w.partitionSpec.isEmpty => w }
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(bad.isEmpty, "q290 must not plan a single-partition window")
   }
 
@@ -556,8 +548,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
       s"q366 windows must partition on pid columns only:\n${badPart.mkString("\n")}")
     val hasRange = plans.map(_.toString).mkString
       .toLowerCase.contains("rangepartitioning")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(hasRange, "q366 must rank through a range exchange")
   }
 
@@ -589,8 +580,7 @@ class PlanSpec extends AnyFunSuite with SparkTestBase {
     val df = SparkEntry.queries("q254_hits")(spark, sfDir)
     df.collect()
     val p = df.queryExecution.executedPlan.toString
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(!p.contains("CartesianProduct"), s"no partitioned cross product:\n$p")
     assert("BroadcastNestedLoopJoin|BroadcastExchange".r.findAllIn(p).size >= 1,
       "the 1-row max tables must broadcast")

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** Differential pin: Quantiles.ntileExact must reproduce SQL ntile
   * bit-for-bit — including the remainder buckets (first n mod k buckets
@@ -24,8 +25,7 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
       .filter(col("e.b") =!= col("g.b"))
       .count()
     assert(mismatches == 0, s"n=$n k=$k: $mismatches bucket mismatches")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   test("ntileExact == ntile when k divides n")(compare(100, 5))
@@ -42,8 +42,7 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
       .withGlobalRank(df, Seq(col("v").desc, col("id").asc), "r")
     assert(expected.as("e").join(got.as("g"), Seq("v", "id"))
       .filter(col("e.r") =!= col("g.r")).count() == 0)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   test("prefixSums == windowed running totals over a global ORDER BY") {
@@ -60,8 +59,7 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
     assert(expected.as("e").join(got.as("g"), Seq("id"))
       .filter(col("e.ca") =!= col("g.ca") || col("e.cb") =!= col("g.cb"))
       .count() == 0)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   // withNextRows must reproduce lead(struct(*), j) over a global ORDER
@@ -85,8 +83,7 @@ class QuantilesSpec extends AnyFunSuite with SparkTestBase {
     val mismatches = expected.as("e").join(got.as("g"), Seq("v", "id"))
       .filter(col("e.nj") =!= col("g.nj")).count()
     assert(mismatches == 0, s"n=$n w=$w: $mismatches neighborhood mismatches")
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
   }
 
   test("withNextRows == global lead(struct, j) with w=2")(compareNext(211, 2))

@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** Structural invariants of the round-10 work:
   *   - q290's two top-k strategies (partitioned window vs bounded
@@ -27,11 +28,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round10Spec extends AnyFunSuite with SparkTestBase {
 
-  private def sweep(): Unit = {
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-  }
-
   test("q290: window and topk strategies are bit-identical") {
     def rows(strategy: String) = {
       val r = graft.queries.RelationalQueries
@@ -39,7 +35,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
         .collect()
         .map(row => (row.getLong(0), row.getLong(1), row.getLong(2), row.getInt(3)))
         .toSet
-      sweep()
+      Runner.release(spark)
       r
     }
     val w = rows("window")
@@ -129,7 +125,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       val h1 = edges.join(bare, Seq("p")).groupBy("c").agg(sum(col("a")).as("h"))
       val n1 = h1.collect().length
       val plan1 = h1.queryExecution.executedPlan.toString
-      sweep()
+      Runner.release(spark)
       assert(n1 == HubDegree)
       assert(plan1.contains("skew=true"),
         s"bare-shuffle hub join must be AQE-split:\n$plan1")
@@ -140,7 +136,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       val h2 = edges.join(aggScores, Seq("p")).groupBy("c").agg(sum(col("a")).as("h"))
       val n2 = h2.collect().length
       val plan2 = h2.queryExecution.executedPlan.toString
-      sweep()
+      Runner.release(spark)
       assert(n2 == HubDegree)
       assert(!plan2.contains("skew=true"),
         "the aggregated-side join unexpectedly got AQE-split — revisit " +
@@ -151,10 +147,10 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   test("salted HITS: bit-identical top-15 and the hub partition load actually splits") {
     val plain = graft.queries.RelationalQueries.q254Hits(spark, sfDir)
       .collect().map(_.toSeq).toSeq
-    sweep()
+    Runner.release(spark)
     val salted = graft.queries.RelationalQueries.q254Hits(spark, sfDir, saltBuckets = 8)
       .collect().map(_.toSeq).toSeq
-    sweep()
+    Runner.release(spark)
     assert(plain.nonEmpty && plain == salted,
       "salting changed the HITS authority ranking")
     // partition-load differential on the salted join LAYOUT (DedupSpec's
@@ -167,7 +163,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val saltedMax = maxPartitionRows(
       edges.withColumn("_salt", pmod(hash(col("c")), lit(8)))
         .repartition(8, col("p"), col("_salt")))
-    sweep()
+    Runner.release(spark)
     assert(unsaltedMax >= HubDegree,
       s"fixture must concentrate the hub degree unsalted, got $unsaltedMax")
     assert(saltedMax * 2 <= unsaltedMax,
@@ -178,11 +174,11 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   test("salted LPA: bit-identical communities at saltBuckets = 8") {
     val plain = graft.queries.RelationalQueries.q199LabelPropagation(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    sweep()
+    Runner.release(spark)
     val salted = graft.queries.RelationalQueries
       .q199LabelPropagation(spark, sfDir, saltBuckets = 8)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
-    sweep()
+    Runner.release(spark)
     assert(plain.nonEmpty && plain == salted,
       "salting changed the LPA community histogram")
   }
@@ -195,13 +191,13 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   private lazy val hwReference: Set[Seq[Any]] = {
     val r = SparkEntry.queries("q304_stream_holt_winters")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     r
   }
 
   private def assertHwTwin(q: String, what: String): Unit = {
     val got = SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     assert(got == hwReference,
       s"$what diverged: ${(got -- hwReference).take(2)} extra, " +
         s"${(hwReference -- got).take(2)} missing")
@@ -226,13 +222,13 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   private lazy val joinReference: Set[Seq[Any]] = {
     val r = SparkEntry.queries("q310_stream_interval_join")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     r
   }
 
   private def assertJoinTwin(q: String, what: String): Unit = {
     val got = SparkEntry.queries(q)(spark, sfDir).collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     assert(joinReference.nonEmpty, "fixture must produce attributed pairs")
     assert(got == joinReference,
       s"$what diverged: ${(got -- joinReference).take(2)} extra, " +
@@ -257,7 +253,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
   test("q315 decomposes exactly: matched rows are q310, null rows are the clickless views") {
     val outer = SparkEntry.queries("q315_stream_interval_join_outer")(spark, sfDir)
       .collect().map(_.toSeq)
-    sweep()
+    Runner.release(spark)
     val matched = outer.filter(_(2) != null).toSet
     assert(matched == joinReference,
       "q315's matched rows must BE the inner join's answer")
@@ -274,7 +270,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       .filter(col("event_type") === "view")
       .select(col("user_id"), col("event_id"))
       .collect().map(r => (r.get(0), r.get(1))).toSet
-    sweep()
+    Runner.release(spark)
     assert(nullViews ++ matchedViews == allViews,
       "outer join must cover every view exactly once")
   }
@@ -286,21 +282,21 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val path = Seq((1L, 2L), (2L, 3L)).toDF("a", "b")
     val r = graft.operators.Edges.adamicAdar(path)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
-    sweep()
+    Runner.release(spark)
     assert(r.toSeq == Seq((1L, 3L, 1L, math.round(1.0e9 / math.log(2.0)))),
       s"path prediction wrong: ${r.toSeq}")
     // triangle 1-2-3: every common-neighbor pair is already an edge —
     // the anti-join must leave nothing
     val tri = Seq((1L, 2L), (1L, 3L), (2L, 3L)).toDF("a", "b")
     val t = graft.operators.Edges.adamicAdar(tri).collect()
-    sweep()
+    Runner.release(spark)
     assert(t.isEmpty, s"triangle predicted ${t.length} pairs")
     // star 1-{2,3,4}: three predicted pairs, each 1/ln(3), and the
     // degree-1 leaves contribute no 1/ln(1) divergence
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("a", "b")
     val s = graft.operators.Edges.adamicAdar(star)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(3)))
-    sweep()
+    Runner.release(spark)
     val w3 = math.round(1.0e9 / math.log(3.0))
     assert(s.toSet == Set((2L, 3L, w3), (2L, 4L, w3), (3L, 4L, w3)),
       s"star prediction wrong: ${s.toSet}")
@@ -316,7 +312,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val pr = graft.operators.Edges.greedyMatching(path, rounds = 2)
       .map(_.collect().map(x => (x.getLong(0), x.getLong(1))).toSet)
-    sweep()
+    Runner.release(spark)
     assert(pr == Seq(Set((1L, 2L)), Set((3L, 4L))),
       s"path handshake wrong: $pr")
     // star 1-{2,3,4}: only (1,2) is mutual, and the residual is
@@ -325,7 +321,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val star = Seq((1L, 2L), (1L, 3L), (1L, 4L)).toDF("a", "b")
     val sr = graft.operators.Edges.greedyMatching(star, rounds = 2)
       .map(_.collect().map(x => (x.getLong(0), x.getLong(1))).toSet)
-    sweep()
+    Runner.release(spark)
     assert(sr == Seq(Set((1L, 2L)), Set.empty),
       s"star handshake wrong: $sr")
     // corpus fixture: the union over rounds is a VALID matching —
@@ -333,7 +329,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val e0 = graft.operators.Edges.coPurchase(spark, sfDir)
     val all = graft.operators.Edges.greedyMatching(e0, rounds = 3)
       .flatMap(_.collect().map(x => (x.getLong(0), x.getLong(1))))
-    sweep()
+    Runner.release(spark)
     val nodes = all.flatMap(p => Seq(p._1, p._2))
     assert(nodes.distinct.length == nodes.length,
       "matched pairs share a node — not a matching")
@@ -347,7 +343,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val wc = graft.queries.SearchQueries
       .q330WildcardSearch(spark, sfDir).collect()
       .map(r => (r.getString(0), r.getString(1)))
-    sweep()
+    Runner.release(spark)
     assert(wc.nonEmpty && wc.distinct.length == wc.length,
       s"permuterm probe emitted a duplicate (pattern, word): ${wc.length} rows")
     // q332's partition claim: [0, W) is covered by the vocab intervals
@@ -356,7 +352,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     // probes with another) would silently DROP draws and break this
     val ns = graft.queries.TextQueries
       .queries("q332_negative_sampling")(spark, sfDir).collect()
-    sweep()
+    Runner.release(spark)
     val keys = ns.map(r => (r.getString(0), r.getString(1), r.getInt(2)))
     assert(keys.distinct.length == keys.length,
       "a draw resolved to more than one negative (overlapping intervals)")
@@ -375,7 +371,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val walks = graft.queries.RelationalQueries
       .q331RandomWalks(spark, sfDir).collect()
-    sweep()
+    Runner.release(spark)
     assert(walks.length == 50, s"expected 50 walks, got ${walks.length}")
     walks.foreach { r =>
       val hops = r.getString(1).split(">").map(_.toLong)
@@ -420,7 +416,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       .distinct().collect()
       .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3)))
       .toSet
-    sweep()
+    Runner.release(spark)
     assert(naive.nonEmpty, "slice produced no triples — vacuous")
     assert(naive == greedy,
       s"greedy/naive diverge: ${(naive -- greedy).take(3)} vs ${(greedy -- naive).take(3)}")
@@ -436,11 +432,11 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val stat = graft.operators.Ranking
       .bm25(docs, "text", "doc_id", terms).collect()
       .map(_.toString).toSet
-    spark.catalog.clearCache()
+    Runner.release(spark)
     val dyn = graft.operators.Ranking
       .bm25Dynamic(docs, "text", "doc_id", terms.toDF("word")).collect()
       .map(_.toString).toSet
-    sweep()
+    Runner.release(spark)
     assert(stat == dyn,
       s"dynamic/static bm25 diverge: ${(stat -- dyn).take(3)} vs ${(dyn -- stat).take(3)}")
   }
@@ -454,7 +450,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       .q328CoresetSelect(spark, sfDir).collect()
       .sortBy(_.getInt(0))
       .map(x => (x.getInt(0), x.getLong(1), x.getDouble(2), x.getDouble(3)))
-    sweep()
+    Runner.release(spark)
     assert(r.length == 4, s"expected 4 steps: ${r.toSeq}")
     assert(r.map(_._2).distinct.length == 4, "a winner was re-admitted")
     val gains = r.map(_._3)
@@ -478,7 +474,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val path = Seq((1L, 2L), (2L, 3L), (3L, 4L)).toDF("a", "b")
     val pr = graft.operators.Edges.maximalIndependentSet(path, rounds = 3)
       .map(_.collect().map(_.getLong(0)).toSet)
-    sweep()
+    Runner.release(spark)
     assert(pr == Seq(Set(1L), Set(3L), Set.empty),
       s"path MIS rounds wrong: $pr")
     // inverted star {2,3,4}-9: ALL leaves beat the center and enter in
@@ -487,7 +483,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val star = Seq((2L, 9L), (3L, 9L), (4L, 9L)).toDF("a", "b")
     val sr = graft.operators.Edges.maximalIndependentSet(star, rounds = 2)
       .map(_.collect().map(_.getLong(0)).toSet)
-    sweep()
+    Runner.release(spark)
     assert(sr == Seq(Set(2L, 3L, 4L), Set.empty),
       s"star MIS rounds wrong: $sr")
     // corpus fixture: the union over rounds is INDEPENDENT (no edge
@@ -499,7 +495,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     assert(rounds.map(_.size).sum == mis.size, "rounds re-admit a node")
     val violating = e0.collect()
       .count(r => mis(r.getLong(0)) && mis(r.getLong(1)))
-    sweep()
+    Runner.release(spark)
     assert(violating == 0, s"$violating edges inside the MIS")
     assert(mis.nonEmpty, "fixture graph admitted nothing")
   }
@@ -518,7 +514,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     for (delta <- Seq(true, false)) {
       val got = graft.operators.Edges.shortestPaths(e, seeds, 4, delta)
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-      sweep()
+      Runner.release(spark)
       assert(got == want, s"deltaFrontier=$delta: $got")
     }
     // and on the corpus graph: the full reached (node, dist) set of the
@@ -531,7 +527,7 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
         .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
       d
     }
-    sweep()
+    Runner.release(spark)
     assert(byScheme(0) == byScheme(1),
       s"corpus schemes differ: ${byScheme(0).size} vs ${byScheme(1).size} rows")
     assert(byScheme(0).nonEmpty)
@@ -548,12 +544,12 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val rounds = graft.operators.Edges.ktruss(e, k = 4, rounds = 2)
     val sizes = rounds.map(_.count())
     val survivors = rounds(1).collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    sweep()
+    Runner.release(spark)
     assert(sizes == Seq(5L, 1L, 0L), s"peel sizes: $sizes")
     assert(survivors == Set((2L, 3L)), s"round-1 survivor: $survivors")
     // k=3 on the same graph is already a 3-truss: nothing peels
     val stable = graft.operators.Edges.ktruss(e, k = 3, rounds = 2).map(_.count())
-    sweep()
+    Runner.release(spark)
     assert(stable == Seq(5L, 5L, 5L), s"k=3 must be stable: $stable")
   }
 
@@ -561,11 +557,11 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
     val mmrFirst = SparkEntry.queries("q311_mmr_rerank")(spark, sfDir)
       .filter(col("step") === 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    sweep()
+    Runner.release(spark)
     val knnTop = SparkEntry.queries("q40_knn_brute")(spark, sfDir)
       .filter(col("rank") === 1)
       .collect().map(r => (r.getLong(0), r.getLong(2))).toSet
-    sweep()
+    Runner.release(spark)
     assert(mmrFirst.nonEmpty && mmrFirst == knnTop,
       s"MMR step 1 diverged from exact rank 1: $mmrFirst vs $knnTop")
   }
@@ -580,10 +576,10 @@ class Round10Spec extends AnyFunSuite with SparkTestBase {
       .map(i => (alphabet(2 * i) + alphabet(2 * i + 1), 1000L - i))
       .toDF("word", "freq")
     val (seqMerges, _) = graft.queries.TextQueries.bpeRoundsFromWords(words, 20)
-    sweep()
+    Runner.release(spark)
     val (batMerges, batches) =
       graft.queries.TextQueries.bpeRoundsBatchedFromWords(words, 20, 8)
-    sweep()
+    Runner.release(spark)
     assert(batMerges == seqMerges,
       "wide-batch learner diverged from the sequential merge log")
     assert(batches.sum == 20)

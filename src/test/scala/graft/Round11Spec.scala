@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** Structural invariants of the round-11 work:
   *   - Adamic–Adar's per-center hub cap is ENFORCED (the round-10
@@ -22,11 +23,6 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 class Round11Spec extends AnyFunSuite with SparkTestBase {
 
-  private def sweep(): Unit = {
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-  }
-
   test("adamicAdar hub cap: over-cap centers emit nothing, others are untouched") {
     import spark.implicits._
     // two components: star with center 10 (degree 5 > cap 4) and path
@@ -37,7 +33,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       (1L, 2L), (2L, 3L)).toDF("a", "b")
     val capped = graft.operators.Edges.adamicAdar(g, hubCap = 4)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getLong(2), x.getLong(3)))
-    sweep()
+    Runner.release(spark)
     assert(capped.toSeq == Seq((1L, 3L, 1L, math.round(1.0e9 / math.log(2.0)))),
       s"cap 4 must drop the degree-5 star center and keep the path: ${capped.toSeq}")
     // at cap 5 the star center is back: C(5,2) = 10 leaf pairs at
@@ -47,7 +43,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val n = uncapped.count()
     val starW = uncapped.filter(col("a") === 11L && col("b") === 12L)
       .collect().map(_.getLong(3))
-    sweep()
+    Runner.release(spark)
     assert(n == 11L, s"cap 5 must emit all 10 star pairs + 1 path pair, got $n")
     assert(starW.toSeq == Seq(math.round(1.0e9 / math.log(5.0))),
       "the star's wedge weight must use the EXACT degree 5 (drop-don't-truncate)")
@@ -66,7 +62,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val subs = graft.operators.Dedup
       .exactSubstrings(docs, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
       .collect()
-    sweep()
+    Runner.release(spark)
     // LEFT-MAXIMALITY: the region is reported exactly ONCE (at its
     // leftmost anchor), not at all 7 interior anchor offsets
     assert(subs.length == 1, s"want one maximal pair, got ${subs.toSeq}")
@@ -81,7 +77,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // positions are 1-based array indices — the LENGTHS must agree)
     val spans = graft.operators.Dedup.dupSpans(docs, "text", "doc_id", n = 3)
       .collect().map(x => (x.getLong(0), x.getInt(1), x.getLong(3))).toSet
-    sweep()
+    Runner.release(spark)
     assert(spans == Set((1L, 0, 9L), (2L, 2, 9L)),
       s"q103 span disagreement: $spans")
     // INTRA-doc repeats pair the two occurrences of the same doc
@@ -89,7 +85,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val sr = graft.operators.Dedup
       .exactSubstrings(self, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3), x.getInt(4)))
-    sweep()
+    Runner.release(spark)
     assert(sr.toSeq == Seq((5L, 7L, 1, 7L, 7)),
       s"intra-doc pair wrong: ${sr.toSeq}")
     // BOTH-AT-POSITION-1: two byte-identical documents — the canonical
@@ -102,7 +98,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val tw = graft.operators.Dedup
       .exactSubstrings(twins, "text", "doc_id", k = 3, window = 16, anchorCap = 256)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3), x.getInt(4)))
-    sweep()
+    Runner.release(spark)
     assert(tw.toSeq == Seq((7L, 1L, 1, 2L, 1)),
       s"identical docs must report one full-length pair at pos 1: ${tw.toSeq}")
     // OVER-CAP LEFT ANCHOR: a duplicated region entered through corpus
@@ -119,7 +115,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       .exactSubstrings(boundary, "text", "doc_id", k = 3, window = 16, anchorCap = 3)
       .collect().map(x => (x.getLong(0), x.getLong(1), x.getInt(2), x.getLong(3),
         x.getInt(4), x.getString(5)))
-    sweep()
+    Runner.release(spark)
     assert(bd.toSeq == Seq((4L, 1L, 3, 2L, 3, "r1 r2 r3 r4")),
       s"over-cap boundary must not lose the region: ${bd.toSeq}")
     // ANCHOR CAP: the same 3-gram in 5 docs exceeds cap 4 — boilerplate
@@ -132,7 +128,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       .exactSubstrings(boiler, "text", "doc_id", k = 3, window = 16, anchorCap = 5)
     val nCapped = capped.count()
     val nUncapped = uncapped.count()
-    sweep()
+    Runner.release(spark)
     assert(nCapped == 0L, s"cap 4 must exclude the 5-occurrence anchor, got $nCapped")
     assert(nUncapped == 4L, s"cap 5 must pair the 5 sorted occurrences, got $nUncapped")
   }
@@ -141,11 +137,11 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val plain = graft.queries.RelationalQueries
       .q289PersonalizedPagerank(spark, sfDir)
       .collect().map(_.toSeq).toSeq
-    sweep()
+    Runner.release(spark)
     val salted = graft.queries.RelationalQueries
       .q289PersonalizedPagerank(spark, sfDir, saltBuckets = 8)
       .collect().map(_.toSeq).toSeq
-    sweep()
+    Runner.release(spark)
     assert(plain.nonEmpty && plain == salted,
       "salting changed the PPR ranking")
   }
@@ -156,11 +152,11 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     // answer — every (view, click) pair must survive the swap exactly
     val dflt = SparkEntry.queries("q310_stream_interval_join")(spark, sfDir)
       .collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     val rocks = graft.queries.StreamParityQueries
       .q310StreamIntervalJoin(spark, sfDir, stateStore = "rocksdb")
       .collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     assert(dflt.nonEmpty, "fixture must produce attributed pairs")
     assert(dflt == rocks,
       s"providers diverged: ${(dflt -- rocks).take(3)} only in default, " +
@@ -184,7 +180,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       col("x.a") === col("y.b") && col("x.b") === col("y.a") &&
         col("x.w") =!= col("y.w"))
     assert(asym.isEmpty, "weights must agree across the two orientations")
-    sweep()
+    Runner.release(spark)
     // catalog: exactly one materialization per (dataset, support) with
     // the declared bucketing metadata
     val tbls = spark.catalog.listTables().collect().map(_.name)
@@ -205,7 +201,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     assert(cpDesc.get("Num Buckets").contains("32") &&
       cpDesc.get("Bucket Columns").exists(_.contains("c")),
       s"customerPart bucketing wrong: $cpDesc")
-    sweep()
+    Runner.release(spark)
     // the scale claim: a frontier⋈edges equi-join on `a` must NOT
     // exchange the edge side — the bucketed scan already reports the
     // hash partitioning, so the only Exchange in the joined plan is the
@@ -235,7 +231,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     } finally {
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prevThreshold)
     }
-    sweep()
+    Runner.release(spark)
   }
 
   // the production helper, not a copy — one definition of the provider
@@ -285,7 +281,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       assert(xs.map(_.cnt) == xs.map(_.cnt).sorted && xs.map(_.cnt).distinct == xs.map(_.cnt),
         s"totals for $k must strictly increase within a run: ${xs.map(_.cnt)}")
     })
-    sweep()
+    Runner.release(spark)
   }
 
   test("recentItemsPerKey: list-state ring evicts from the front and survives batch splits") {
@@ -321,7 +317,7 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
     val mid = got.filter(x => x.user_id == 1L && x.n_seen == 2L)
     assert(mid.map(_.recent) == Seq("11>12"),
       s"batch-1 ring must be 11>12 before the cross-batch eviction: $got")
-    sweep()
+    Runner.release(spark)
   }
 
   test("dedupBoundedOnIngest: in-window duplicates drop, post-eviction keys re-admit") {
@@ -359,6 +355,6 @@ class Round11Spec extends AnyFunSuite with SparkTestBase {
       .select("event_id").as[Long].collect().toSet
     assert(got == Set(101L, 103L, 105L, 106L, 107L),
       s"want in-window drops (102, 104) and post-eviction re-admission (107): $got")
-    sweep()
+    Runner.release(spark)
   }
 }

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
+import graft.tools.Runner
 
 /** Structural invariants of the round-12 work:
   *   - the streaming near-dup bucket state EVICTS (the round-11
@@ -29,11 +30,6 @@ import graft.streaming.StreamingOps
   *     occurrence of each long-enough pair and rebuilds every document.
   */
 class Round12Spec extends AnyFunSuite with SparkTestBase {
-
-  private def sweep(): Unit = {
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
-  }
 
   private def ts(sec: Long): Timestamp =
     Timestamp.from(java.time.Instant.ofEpochSecond(sec))
@@ -195,11 +191,11 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
     val on = graft.queries.StreamParityQueries
       .q335StreamQuota(spark, sfDir, changelog = true)
       .collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     val off = graft.queries.StreamParityQueries
       .q335StreamQuota(spark, sfDir, changelog = false)
       .collect().map(_.toSeq).toSet
-    sweep()
+    Runner.release(spark)
     assert(on.nonEmpty, "fixture must produce quota rows")
     assert(on == off,
       s"checkpoint formats diverged: ${(on -- off).take(3)} only with changelog, " +
@@ -215,7 +211,7 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       val n1 = graft.operators.Edges.coPurchase(spark, dir).count()
-      sweep()
+      Runner.release(spark)
       // REGENERATE the dataset at the SAME path: two more baskets add
       // the (1,3) edge — a stale materialization would still read 1
       Seq((1L, 1L), (1L, 2L), (2L, 1L), (2L, 2L),
@@ -223,7 +219,7 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
         .toDF("l_orderkey", "l_partkey")
         .coalesce(1).write.mode("overwrite").parquet(s"$dir/lineitem.parquet")
       val n2 = graft.operators.Edges.coPurchase(spark, dir).count()
-      sweep()
+      Runner.release(spark)
       assert(n1 == 1L && n2 == 2L,
         s"source fingerprint must invalidate the materialization: $n1 -> $n2")
     } finally {
@@ -307,7 +303,7 @@ class Round12Spec extends AnyFunSuite with SparkTestBase {
         anchorCap = 256, minLen = 10)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getString(3)))
       .sortBy(_._1)
-    sweep()
+    Runner.release(spark)
     assert(out(0) == ((1L, 15L, 0L, s"x1 x2 $run y1")),
       s"the earlier occurrence's doc must survive intact: ${out(0)}")
     assert(out(1) == ((2L, 15L, 12L, "z1 z2 z3")),

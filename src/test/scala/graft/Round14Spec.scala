@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.queries.TextQueries
 import graft.streaming.StreamingOps
+import graft.tools.Runner
 
 /** Structural invariants of the round-14 work:
   *   - BPE APPLY ([[graft.functions.BpeEncode]]) is BIT-IDENTICAL to
@@ -285,8 +286,7 @@ class Round14Spec extends AnyFunSuite with SparkTestBase {
         spark.sql(s"CREATE TABLE `$t` AS SELECT 1 AS a")
       }
       graft.operators.Edges.coPurchase(spark, dirA).count()
-      spark.catalog.clearCache()
-      org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+      Runner.release(spark)
       assert(!spark.catalog.tableExists(legacyA),
         s"dir A's legacy-format table must be swept: $legacyA")
       assert(spark.catalog.tableExists(legacyB),

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** Structural invariants of the round-15 work:
   *   - the md5-HLL behind q7 (the last rows-only entry, flipped to a
@@ -138,8 +139,7 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
     val dir = "/root/testdata/sf0.01"
     val rows = SparkEntry.queries("q371_pack_manifest")(spark, dir)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2), r.getLong(5)))
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(rows.nonEmpty)
     val lastSeq = rows.groupBy(_._1).view.mapValues(_.map(_._2).max).toMap
     for ((b, s, _, toks) <- rows) {
@@ -159,8 +159,7 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
         "text", "doc_id", seqLen = 512, buckets = 8)
       .groupBy("bucket").agg(sum(col("n_tok")).as("t"))
       .collect().map(r => r.getInt(0) -> r.getLong(1)).toMap
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     for ((b, t) <- packedMass if t > 0)
       assert(manifestMass(b) == t, s"bucket $b: manifest $manifestMass vs packed $t")
   }
@@ -230,8 +229,7 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
     val got = SparkEntry.queries("q366_curriculum_order")(spark, dir)
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sortBy(_._1)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     // the replaced formulation, verbatim (correct but parallelism-capped
     // at 10 by the decile partition key — the round-14 weak)
     val deciled = graft.operators.Quantiles.ntileExact(
@@ -246,8 +244,7 @@ class Round15Spec extends AnyFunSuite with SparkTestBase {
       .select(col("doc_id"), col("decile"), col("position"))
       .collect().map(r => (r.getLong(0), r.getInt(1), r.getLong(2)))
       .sortBy(_._1)
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     assert(got.length == want.length && got.length > 0)
     assert(got.sameElements(want),
       s"first diff: ${got.zip(want).find(p => p._1 != p._2)}")

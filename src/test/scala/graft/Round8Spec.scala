@@ -1,6 +1,7 @@
 package graft
 
 import org.scalatest.funsuite.AnyFunSuite
+import graft.tools.Runner
 
 /** Structural invariants of the round-8 queries — properties the oracle
   * hash can't see failing for the right reason: funnel conservation,
@@ -10,8 +11,7 @@ class Round8Spec extends AnyFunSuite with SparkTestBase {
 
   private def rows(q: String) = {
     val r = SparkEntry.queries(q)(spark, sfDir).collect()
-    spark.catalog.clearCache()
-    org.apache.spark.sql.graft.Bridge.freeAllPersistedRdds(spark)
+    Runner.release(spark)
     r
   }
 

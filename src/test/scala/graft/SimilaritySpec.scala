@@ -3,6 +3,7 @@ package graft
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import graft.operators.Similarity
+import graft.tools.Runner
 
 class SimilaritySpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -174,7 +175,7 @@ class SimilaritySpec extends AnyFunSuite with SparkTestBase {
     val kept = graft.queries.SimilarityQueries.q89SemanticDedup(spark, sfDir)
     val keptIds = kept.select("vec_id").as[Long].collect().toSet
     val n = spark.read.parquet(s"$sfDir/embeddings.parquet").count()
-    spark.catalog.clearCache()
+    Runner.release(spark)
     // survivors are a strict, non-empty subset on a fixture with near-dups
     assert(keptIds.nonEmpty && keptIds.size <= n)
     // re-derive the dropped set independently: any vector with a

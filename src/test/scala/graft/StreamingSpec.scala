@@ -5,6 +5,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.scalatest.funsuite.AnyFunSuite
 import graft.streaming.StreamingOps
 import graft.streaming.StreamingOps.{Event, SessionUpdate}
+import graft.tools.Runner
 
 class StreamingSpec extends AnyFunSuite with SparkTestBase {
   import spark.implicits._
@@ -110,7 +111,7 @@ class StreamingSpec extends AnyFunSuite with SparkTestBase {
     // DedupSpec pins the FP excess at ~zero on this fixture)
     val flagged = graft.queries.DedupQueries.q78Decontaminate(spark, sfDir)
       .select("doc_id").as[Long].collect().toSet
-    spark.catalog.clearCache()
+    Runner.release(spark)
     val rest = corpus.filter($"doc_id" >= 20)
       .select($"doc_id", $"text").as[(Long, String)].collect()
     val expected = rest.map(_._1).toSet -- flagged
